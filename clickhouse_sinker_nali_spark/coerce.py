@@ -13,9 +13,12 @@ instead (reference docs/dev/introduction.md:40-56, parser/fastjson.go:278-300):
 - int overflow -> clamp to the declared ClickHouse type's borders
 - array targets: null array -> [], null elements -> element default
 
-All of this is expressed as Catalyst column expressions (whole-stage
-codegen'd, no Python in the hot path). The byte-faithful JSON-getter
-variant lives in parsers.py (``parse_json(..., faithful=True)``).
+All of this is expressed as Catalyst column expressions (no Python in the
+hot path). The coercers take a ``stage`` function (``parsers.Staging.chain``)
+that hoists the helpers a target references more than once into their own
+projections; inside an array's transform lambda nothing can be hoisted and
+they pass ``_inline``. The bug-level-faithful Python getters live in
+faithful.py.
 """
 
 from __future__ import annotations
@@ -24,25 +27,30 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .datetimes import epoch, parse_datetime_any
+from .datetimes import (
+    Stage,
+    epoch,
+    parse_datetime_any,
+    parse_datetime_num,
+    parse_datetime_str,
+)
 from .schema import INT_BORDERS, ColumnSpec, InternalType
 
 ZERO_UUID = "00000000-0000-0000-0000-000000000000"
 
+# the element type of each array target
+_ELEM_CH_TYPES = {
+    InternalType.INT_ARRAY: "Int64",
+    InternalType.FLOAT_ARRAY: "Float64",
+    InternalType.STRING_ARRAY: "String",
+    InternalType.DATETIME_ARRAY: "DateTime",
+}
 
-def let(col: Column, fn) -> Column:
-    """Expression-level ``let``: evaluate ``col`` once, reference it many
-    times via a bound lambda variable.
 
-    Spark's whole-stage-codegen subexpression elimination deliberately skips
-    conditionally-evaluated branches (``coalesce``/``when``), so an
-    expensive source expression referenced from each branch of a cascade —
-    e.g. ``from_json(value).field`` under the 16-attempt datetime layout
-    cascade — is re-evaluated per attempt, re-parsing the JSON every time
-    (measured 20×+ slowdown on the ingest path).  ``transform``'s lambda
-    variable is bound once per row, giving the missing sharing.
-    """
-    return F.transform(F.array(col), fn).getItem(0)
+def _inline(col: Column) -> Column:
+    """The ``stage`` function inside a transform lambda: the element is a
+    lambda variable, bound once per element, and nothing can be hoisted."""
+    return col
 
 
 def default_literal(spec: ColumnSpec) -> Column:
@@ -78,18 +86,13 @@ def clamp_int(col: Column, ch_base_type: str) -> Column:
 
 
 def _scalar_coercion(
-    raw: Column,
-    spec: ColumnSpec,
-    time_unit: float,
-    dt_cleaned: Column | None = None,
-    dt_ts0: Column | None = None,
+    raw: Column, spec: ColumnSpec, time_unit: float, stage: Stage
 ) -> Column:
     """Coerce one already-extracted (string-ish) value to the target type.
 
     ``raw`` is the value as produced by a permissive JSON/CSV read: a string
     for scalar fields (raw JSON text for objects/arrays feeding a String
-    target), or NULL when missing.  ``dt_cleaned`` is the hot path's
-    precomputed ``datetimes._clean(raw)`` attribute (see parse_datetime_str).
+    target), or NULL when missing.
     """
     it = spec.internal
     if it == InternalType.INT:
@@ -120,78 +123,45 @@ def _scalar_coercion(
     if it == InternalType.STRING:
         return raw.cast("string")
     if it == InternalType.DATETIME:
-        return parse_datetime_any(raw, time_unit, cleaned=dt_cleaned, first=dt_ts0)
+        return parse_datetime_any(raw, time_unit, stage)
     if it == InternalType.ELASTIC_DATETIME:
-        return F.unix_timestamp(
-            parse_datetime_any(raw, time_unit, cleaned=dt_cleaned, first=dt_ts0)
-        )
+        return F.unix_timestamp(parse_datetime_any(raw, time_unit, stage))
     raise ValueError(f"not a scalar type: {it}")
 
 
-def _elem_spec(spec: ColumnSpec) -> ColumnSpec:
-    elem_internal = {
-        InternalType.INT_ARRAY: "Int64",
-        InternalType.FLOAT_ARRAY: "Float64",
-        InternalType.STRING_ARRAY: "String",
-        InternalType.DATETIME_ARRAY: "DateTime",
-    }[spec.internal]
-    return ColumnSpec(name=spec.name, ch_type=elem_internal)
+def _coerce(
+    scalar,
+    value: Column,
+    elements: Column,
+    spec: ColumnSpec,
+    time_unit: float,
+    stage: Stage,
+) -> Column:
+    """Cast + default-fill one target with the getter matrix ``scalar``.
+
+    Array targets coerce each of ``elements`` with ``transform`` (JVM-side
+    lambda), defaulting NULL elements — array elements are never null in
+    the reference's model (parser/fastjson.go:170-206).
+    """
+    if spec.internal in _ELEM_CH_TYPES:
+        espec = ColumnSpec(name=spec.name, ch_type=_ELEM_CH_TYPES[spec.internal])
+        edefault = default_literal(espec)
+        arr = F.transform(
+            elements,
+            lambda e: F.coalesce(scalar(e, espec, time_unit, _inline), edefault),
+        )
+        return F.coalesce(arr, default_literal(spec)).alias(spec.name)
+    coerced = scalar(value, spec, time_unit, stage)
+    if spec.nullable:
+        return coerced.alias(spec.name)
+    return F.coalesce(coerced, default_literal(spec)).alias(spec.name)
 
 
 def coerce_expr(
-    raw: Column,
-    spec: ColumnSpec,
-    time_unit: float = 1.0,
-    raw_is_attr: bool = False,
-    dt_cleaned: Column | None = None,
-    dt_ts0: Column | None = None,
+    raw: Column, spec: ColumnSpec, time_unit: float, stage: Stage
 ) -> Column:
-    """Full lenient coercion for one column: cast + default-fill.
-
-    Array targets coerce each element with ``transform`` (JVM-side lambda),
-    defaulting NULL elements — array elements are never null in the
-    reference's model (parser/fastjson.go:170-206).
-
-    ``raw_is_attr=True`` means ``raw`` is an attribute reference that a
-    prior projection already computed (the hot path hoists extraction into
-    its own stage); referencing it repeatedly is free, so the HOF ``let``
-    binding — which drops the whole subtree out of whole-stage codegen —
-    is skipped.
-    """
-    if spec.internal in (
-        InternalType.INT_ARRAY,
-        InternalType.FLOAT_ARRAY,
-        InternalType.STRING_ARRAY,
-        InternalType.DATETIME_ARRAY,
-    ):
-        espec = _elem_spec(spec)
-        edefault = default_literal(espec)
-        arr = F.transform(
-            raw,
-            # element values are transform-lambda variables: already bound
-            # once, no extra let needed
-            lambda x: F.coalesce(
-                _scalar_coercion(x, espec, time_unit), edefault
-            ),
-        )
-        return F.coalesce(arr, default_literal(spec)).alias(spec.name)
-
-    if raw_is_attr:
-        coerced = _scalar_coercion(
-            raw, spec, time_unit, dt_cleaned=dt_cleaned, dt_ts0=dt_ts0
-        )
-        if spec.nullable:
-            return coerced.alias(spec.name)
-        return F.coalesce(coerced, default_literal(spec)).alias(spec.name)
-
-    if spec.nullable:
-        return let(raw, lambda r: _scalar_coercion(r, spec, time_unit)).alias(spec.name)
-    return let(
-        raw,
-        lambda r: F.coalesce(
-            _scalar_coercion(r, spec, time_unit), default_literal(spec)
-        ),
-    ).alias(spec.name)
+    """Full lenient coercion of a staged raw (text or array<string>) value."""
+    return _coerce(_scalar_coercion, raw, raw, spec, time_unit, stage)
 
 
 # Kafka virtual columns: any target column named __kafka*_topic/_partition/
@@ -239,22 +209,12 @@ def kafka_virtual_source(name: str) -> str | None:
 # branch checks the token type FIRST and only then casts.
 
 
-def _vtype(fv: Column) -> Column:
-    return F.schema_of_variant(fv)
-
-
 _OVERFLOW_DEC = r"^DECIMAL\((19|2[0-9]|3[0-8]),0\)$"
 _SMALL_INT_DEC = r"^DECIMAL\(([1-9]|1[0-8]),0\)$"
 
 
 def _variant_scalar(
-    fv: Column,
-    spec: ColumnSpec,
-    time_unit: float,
-    vt: Column | None = None,
-    dt_str: Column | None = None,
-    dt_cleaned: Column | None = None,
-    dt_ts0: Column | None = None,
+    fv: Column, spec: ColumnSpec, time_unit: float, stage: Stage
 ) -> Column:
     """fastjson getter matrix over one variant value; NULL = use default.
 
@@ -264,15 +224,12 @@ def _variant_scalar(
     only serves String *elements* of Array(String) targets, where the
     per-element raw text is unrecoverable and normalized form is accepted.
 
-    ``vt``/``dt_str``/``dt_cleaned``: the hot path precomputes
-    ``schema_of_variant(fv)`` (and, for DateTime targets, the string
-    extraction and its cleaned form) in a prior projection and passes the
-    attributes in.  Inlined, the type tag is instantiated once per CASE
-    branch — conditional evaluation defeats codegen subexpression
-    elimination, so schema_of_variant ran 3-6× per field per row (the
-    round-2 10× ingest regression).
+    The ``schema_of_variant`` type tag is staged: inlined, it is
+    instantiated once per CASE branch — conditional evaluation defeats
+    codegen subexpression elimination, so it ran 3-6× per field per row
+    (the round-2 10× ingest regression).
     """
-    vt = vt if vt is not None else _vtype(fv)
+    vt = stage(F.schema_of_variant(fv))
     it = spec.internal
     is_num = (vt == "BIGINT") | (vt == "DOUBLE") | vt.startswith("DECIMAL")
     if it == InternalType.INT:
@@ -299,15 +256,10 @@ def _variant_scalar(
             .when(vt.isNotNull() & (vt != "VOID"), s)
         )
     if it in (InternalType.DATETIME, InternalType.ELASTIC_DATETIME):
-        from .datetimes import parse_datetime_num, parse_datetime_str
-
-        s = dt_str if dt_str is not None else F.try_variant_get(fv, "$", "string")
+        s = stage(F.try_variant_get(fv, "$", "string"))
         dt = F.when(
             is_num, parse_datetime_num(F.try_variant_get(fv, "$", "double"), time_unit)
-        ).when(
-            vt == "STRING",
-            parse_datetime_str(s, cleaned=dt_cleaned, first=dt_ts0),
-        )
+        ).when(vt == "STRING", parse_datetime_str(s, stage))
         if it == InternalType.ELASTIC_DATETIME:
             return F.unix_timestamp(dt)
         return dt
@@ -315,44 +267,8 @@ def _variant_scalar(
 
 
 def coerce_variant_expr(
-    fv: Column,
-    spec: ColumnSpec,
-    time_unit: float = 1.0,
-    vt: Column | None = None,
-    dt_str: Column | None = None,
-    dt_cleaned: Column | None = None,
-    dt_ts0: Column | None = None,
+    fv: Column, spec: ColumnSpec, time_unit: float, stage: Stage
 ) -> Column:
-    """Full lenient coercion from a variant field (flat-JSON hot path).
-
-    When ``vt`` (a precomputed ``schema_of_variant(fv)`` attribute) is
-    given, ``fv`` is assumed to be an attribute too: no ``let`` binding
-    is emitted, everything stays in whole-stage codegen, and each helper
-    is evaluated exactly once per row.  Without it (array elements, ad-hoc
-    callers) the HOF ``let`` still guards against re-extraction.
-    """
-    if spec.internal in (
-        InternalType.INT_ARRAY,
-        InternalType.FLOAT_ARRAY,
-        InternalType.STRING_ARRAY,
-        InternalType.DATETIME_ARRAY,
-    ):
-        espec = _elem_spec(spec)
-        edefault = default_literal(espec)
-        arr = F.try_variant_get(fv, "$", "array<variant>")
-        coerced = F.transform(
-            arr,
-            lambda e: F.coalesce(_variant_scalar(e, espec, time_unit), edefault),
-        )
-        return F.coalesce(coerced, default_literal(spec)).alias(spec.name)
-
-    if vt is not None:
-        coerced = _variant_scalar(
-            fv, spec, time_unit, vt=vt, dt_str=dt_str, dt_cleaned=dt_cleaned,
-            dt_ts0=dt_ts0,
-        )
-    else:
-        coerced = let(fv, lambda f: _variant_scalar(f, spec, time_unit))
-    if spec.nullable:
-        return coerced.alias(spec.name)
-    return F.coalesce(coerced, default_literal(spec)).alias(spec.name)
+    """Full lenient coercion of a staged variant field (flat-JSON path)."""
+    elements = F.try_variant_get(fv, "$", "array<variant>")
+    return _coerce(_variant_scalar, fv, elements, spec, time_unit, stage)

@@ -14,10 +14,16 @@ Numeric values are epoch seconds scaled by ``time_unit`` and clamped to
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 MAX_UNIX = float(2**32)
+
+# hoists an expression into its own projection and returns the attribute
+# (parsers.Staging.chain), or the identity inside a transform lambda
+Stage = Callable[[Column], Column]
 
 
 def epoch() -> Column:
@@ -65,37 +71,30 @@ def _clean(col: Column) -> Column:
     )
 
 
-def parse_datetime_str(
-    col: Column,
-    layouts: tuple[str, ...] = _EXTRA_LAYOUTS,
-    cleaned: Column | None = None,
-    first: Column | None = None,
-) -> Column:
+def parse_datetime_str(col: Column, stage: Stage) -> Column:
     """String -> timestamp via the layout cascade; NULL when nothing matches.
 
-    ``try_to_timestamp`` keeps every attempt JVM-side and codegen-friendly;
-    Catalyst folds the constant format literals so the cascade costs one
+    This is the one DateTime staging every parse route shares.  Two
+    things are staged (see ``Stage``), both referencing ``col``:
+
+    - the default-parser attempt ``try_to_timestamp(col)``, computed once;
+    - ``_clean(col)``, gated on that attempt failing.  On a single-layout
+      ISO feed, the reference's stated operating regime, the two
+      regexp_replace calls never run (they were the largest single term in
+      the apache-ingest profile).
+
+    Inlined instead, every coalesce attempt re-instantiates the cleaned
+    string: conditional branches defeat codegen subexpression elimination,
+    so the cascade paid O(layouts) cleans per row (the round-2 10× ingest
+    regression).  ``try_to_timestamp`` keeps every attempt JVM-side and
+    Catalyst folds the constant format literals, so the cascade costs one
     projection, no shuffle, no Python.
-
-    ``cleaned``: the hot ingest path precomputes ``_clean(col)`` ONCE in a
-    prior projection and passes the attribute here.  Without it, the
-    trim+regexp chain is instantiated per layout attempt — coalesce branches
-    are conditionally evaluated, so codegen's subexpression elimination
-    cannot share them, and the cascade pays O(layouts) cleans per row
-    (the round-2 10× ingest regression).
-
-    ``first``: a precomputed ``try_to_timestamp(col)`` attribute — the hot
-    path stages it so (a) the default-parser attempt is computed once and
-    (b) the staged ``cleaned`` can be gated on it (``_clean`` only regexes
-    rows the default parser REJECTED — on a single-layout ISO feed, the
-    reference's stated operating regime, the two regexp_replace calls
-    vanish from the per-row cost entirely; they were the largest single
-    term in the apache-ingest profile).
     """
-    cl = cleaned if cleaned is not None else _clean(col)
-    attempts = [first if first is not None else F.try_to_timestamp(col)]
-    attempts += [F.try_to_timestamp(cl, F.lit(p)) for p in layouts]
-    return F.coalesce(*attempts)
+    first = stage(F.try_to_timestamp(col))
+    cleaned = stage(F.when(first.isNull(), _clean(col)))
+    return F.coalesce(
+        first, *(F.try_to_timestamp(cleaned, F.lit(p)) for p in _EXTRA_LAYOUTS)
+    )
 
 
 def parse_datetime_num(col: Column, time_unit: float = 1.0) -> Column:
@@ -107,20 +106,14 @@ def parse_datetime_num(col: Column, time_unit: float = 1.0) -> Column:
     ).otherwise(epoch())
 
 
-def parse_datetime_any(
-    col: Column,
-    time_unit: float = 1.0,
-    layouts: tuple[str, ...] = _EXTRA_LAYOUTS,
-    cleaned: Column | None = None,
-    first: Column | None = None,
-) -> Column:
+def parse_datetime_any(col: Column, time_unit: float, stage: Stage) -> Column:
     """Mixed string/number field -> timestamp.
 
     Numeric-looking strings are treated as epoch numbers (scaled + clamped);
-    anything else goes through the layout cascade.  ``cleaned``/``first``
-    as in ``parse_datetime_str``.
+    anything else goes through the layout cascade (``stage`` as in
+    ``parse_datetime_str``).
     """
-    is_num = col.cast("string").rlike(r"^-?\d+(\.\d+)?$")
-    return F.when(is_num, parse_datetime_num(col, time_unit)).otherwise(
-        parse_datetime_str(col.cast("string"), layouts, cleaned=cleaned, first=first)
-    )
+    s = col.cast("string")
+    return F.when(
+        s.rlike(r"^-?\d+(\.\d+)?$"), parse_datetime_num(col, time_unit)
+    ).otherwise(parse_datetime_str(s, stage))

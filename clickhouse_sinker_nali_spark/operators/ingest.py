@@ -29,7 +29,7 @@ from ..enrich import (
     normalize_class,
 )
 from ..functions import portable_hash64_sql, shard_hash, shard_stripe
-from ..parsers import parse_csv, parse_json
+from ..parsers import Staging, parse_csv, parse_json
 from ..schema import TableSchema
 from ..session import load_table
 
@@ -139,11 +139,13 @@ def ingest_datetime_layouts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.date_format("o_orderdate", "EEE, dd MMM yyyy HH:mm:ss 'GMT'"))
     )
     msgs = orders.select("o_orderkey", rendered.alias("raw_ts"))
-    return msgs.select(
-        "o_orderkey",
-        "raw_ts",
-        parse_datetime_str(F.col("raw_ts")).alias("parsed_ts"),
-    ).orderBy("o_orderkey")
+    staging = Staging()
+    parsed = parse_datetime_str(F.col("raw_ts"), staging.chain("__ts"))
+    return (
+        staging.apply(msgs)
+        .select("o_orderkey", "raw_ts", parsed.alias("parsed_ts"))
+        .orderBy("o_orderkey")
+    )
 
 
 INGEST_DATETIME_SQL = """

@@ -7,11 +7,15 @@ Covers the reference's parser surface (SURVEY.md §2.1 P1-P6):
 - DateTime layout cascade          -> datetimes.py
 - per-key type inference for dynamic schema -> ``infer_internal_type``
 
-Design: ONE ``from_json``/``from_csv`` with an all-string schema (objects
-and arrays surface as raw JSON text — matching the reference's
-"string target gets raw JSON" rule), then the lenient coercion expressions
-from coerce.py. Everything stays inside whole-stage codegen; there is no
-Python in the hot path.
+Design: one message parse per format — ``from_csv``, or for JSON the
+variant parse (flat fields) plus one ``from_json`` with an all-string
+schema (String targets get the value's raw JSON text, the reference's
+"string target gets raw JSON" rule) — then the lenient coercion
+expressions from coerce.py, staged by ``Staging`` so each helper runs once
+per row. There is no Python in the hot path. The projections are
+whole-stage codegen'd except those holding ``from_json`` (so the JSON
+message-parse projection, whenever a String or other raw-path target
+exists) or an array ``transform`` lambda, which run interpreted.
 
 Dotted source names address nested JSON (gjson path syntax, reference
 parser/gjson.go) and are extracted with ``get_json_object``. A literal dot
@@ -23,11 +27,16 @@ The bug-level-faithful Python reimplementation of the getter semantics
 
 from __future__ import annotations
 
+import itertools
+import re
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .coerce import coerce_expr, kafka_virtual_source
+from .coerce import coerce_expr, coerce_variant_expr, kafka_virtual_source
+from .datetimes import Stage
 from .schema import ColumnSpec, InternalType, TableSchema
 
 _ARRAY_TYPES = {
@@ -36,6 +45,7 @@ _ARRAY_TYPES = {
     InternalType.STRING_ARRAY,
     InternalType.DATETIME_ARRAY,
 }
+_IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 
 def _split_source_path(source: str) -> list[str]:
@@ -86,36 +96,85 @@ def _raw_string_schema(specs: list[ColumnSpec]) -> T.StructType:
     )
 
 
-def _raw_value_expr(parsed: Column, value_col: Column, spec: ColumnSpec) -> Column:
-    """Pick the raw (string-ish) value for one target column."""
-    parts = _split_source_path(spec.source_name)
-    if len(parts) == 1:
-        return parsed.getField(parts[0])
-    # nested path: re-extract from the original message text (gjson path).
-    # Bracket segments must NOT be preceded by a dot — Spark's JsonPath
-    # parser rejects "$.['a.b'].c" (silently NULLing every row) but
-    # accepts "$['a.b'].c".
-    path = "$" + "".join(
-        f"['{p}']" if "." in p else f".{p}" for p in parts
-    )
-    raw = F.get_json_object(value_col, path)
-    if spec.internal in _ARRAY_TYPES:
-        return F.from_json(raw, T.ArrayType(T.StringType()))
-    return raw
+class Staging:
+    """Single-evaluation staging for one parse.
+
+    Every expensive expression a target references more than once
+    downstream — its extraction, the variant type tag and, for DateTime
+    targets, the default-parse attempt and the parse-gated cleaned string —
+    is hoisted into its own projection and referenced as an attribute.
+    Catalyst's CollapseProject never inlines a non-cheap producer that is
+    referenced more than once, so the projections survive optimization,
+    each helper is computed exactly once per row, and the CASE branches
+    downstream compare attributes instead of re-running schema_of_variant
+    or trim+regexp chains per branch (the round-2 10× ingest parse
+    regression: O(layouts × branches) work per row).
+    """
+
+    def __init__(self) -> None:
+        self._layers: list[dict[str, Column]] = []
+
+    def chain(self, prefix: str) -> Stage:
+        """The ``stage`` function of one target: each call hoists its
+        expression one projection after the previous call's, so it may
+        reference every attribute staged before it."""
+        depth = itertools.count()
+
+        def stage(expr: Column) -> Column:
+            level = next(depth)
+            if level == len(self._layers):
+                self._layers.append({})
+            name = f"{prefix}_{level}"
+            self._layers[level][name] = expr
+            return F.col(name)
+
+        return stage
+
+    def apply(self, df: DataFrame) -> DataFrame:
+        for layer in self._layers:
+            df = df.withColumns(layer)
+        return df
 
 
-import re as _re
-
-_IDENT_RE = _re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-
-
-def parse_json(
+def _staged_parse(
     df: DataFrame,
     schema: TableSchema,
-    value_col: str = "value",
-    time_unit: float = 1.0,
-    keep_value: bool = False,
+    time_unit: float,
+    extract: Callable[[ColumnSpec], tuple[Column, bool]],
+    message_parse: Callable[[], dict[str, Column]],
 ) -> DataFrame:
+    """The parse loop ``parse_json`` and ``parse_csv`` share.
+
+    ``extract(spec)`` is the format's per-target extraction: a variant
+    field (``(value, True)``) or the raw text, array<string> for array
+    targets (``(value, False)``).  ``message_parse()`` runs after every
+    extraction and returns the message parses they referenced, one
+    projection below the staged ones.  ``__kafka*`` virtual columns are
+    filled from the message metadata instead.  The output is exactly the
+    dims: Kafka metadata reaches the table only through explicit
+    ``__kafka*`` dims (a silent topic/partition/offset passthrough broke
+    JDBC inserts into tables without those columns).
+    """
+    staging = Staging()
+    out: list[Column] = []
+    for i, spec in enumerate(schema):
+        ksrc = kafka_virtual_source(spec.name)
+        if ksrc is not None and ksrc in df.columns:
+            out.append(F.col(ksrc).cast(spec.spark_type).alias(spec.name))
+            continue
+        stage = staging.chain(f"__sinker_{i}")
+        value, variant = extract(spec)
+        coerce = coerce_variant_expr if variant else coerce_expr
+        out.append(coerce(stage(value), spec, time_unit, stage))
+    return staging.apply(df.withColumns(message_parse())).select(*out)
+
+
+def _text_array(text: Column) -> Column:
+    """An array target's raw JSON text -> array<string> of element texts."""
+    return F.from_json(text, T.ArrayType(T.StringType()))
+
+
+def parse_json(df: DataFrame, schema: TableSchema, time_unit: float = 1.0) -> DataFrame:
     """Parse a JSON ``value`` column into the target table schema.
 
     Flat identifier-named fields go through the VariantType path
@@ -131,164 +190,45 @@ def parse_json(
     dropped-but-acked (reference task/task.go:280-287). Use
     ``with_parse_errors`` to split those out.
     """
-    from .coerce import coerce_variant_expr
-    from .datetimes import _clean
+    value = F.col("value")
+    raw_path_specs: list[ColumnSpec] = []  # fields of the raw from_json parse
+    variant_used = False
 
-    specs = list(schema)
-    value = F.col(value_col)
-
-    # Single-evaluation staging.  Every expensive expression that is
-    # referenced more than once downstream — the two message parses, each
-    # field's variant extraction, its schema_of_variant type tag, and the
-    # cleaned datetime string — is hoisted into its OWN projection stage and
-    # referenced as an attribute afterwards.  Catalyst's CollapseProject
-    # never inlines a non-cheap producer referenced more than once, so the
-    # stages survive optimization, each helper is computed exactly once per
-    # row inside whole-stage codegen, and the per-branch CASE conditions
-    # downstream compare precomputed attributes instead of re-running
-    # schema_of_variant / trim+regexp chains per branch (the round-2 10×
-    # ingest parse regression: O(layouts × branches) interpreted work/row).
-    parsed = F.col("__sinker_praw")
-    root = F.col("__sinker_vroot")
-
-    _DT_TYPES = (InternalType.DATETIME, InternalType.ELASTIC_DATETIME)
-    stage_extract: dict[str, Column] = {}   # fv / raw per target column
-    stage_tag: dict[str, Column] = {}       # vt / datetime string per column
-    stage_clean: dict[str, Column] = {}     # staged default-parse attempts
-    stage_lazy: dict[str, Column] = {}      # cleaned dt string, parse-gated
-    plans: list[tuple] = []  # (kind, spec, names...) in output order
-    raw_path_specs: list[ColumnSpec] = []   # specs extracted from the raw parse
-
-    for i, spec in enumerate(specs):
-        ksrc = kafka_virtual_source(spec.name)
-        if ksrc is not None and ksrc in df.columns:
-            plans.append(("kafka", spec, ksrc))
-            continue
+    def extract(spec: ColumnSpec) -> tuple[Column, bool]:
+        nonlocal variant_used
         parts = _split_source_path(spec.source_name)
-        if (
-            len(parts) == 1
-            and _IDENT_RE.match(parts[0])
-            and spec.internal != InternalType.STRING
-        ):
-            # String targets take the raw-text path below instead: the
-            # reference emits the value's raw JSON text verbatim, while
-            # variant re-serialization normalizes it (sorts object keys,
-            # drops ".0" from integral floats inside arrays).
-            fv_name = f"__sinker_fv{i}"
-            stage_extract[fv_name] = F.try_variant_get(
-                root, f"$.{parts[0]}", "variant"
-            )
-            if spec.internal in _ARRAY_TYPES:
-                # array elements are coerced inside a transform lambda; the
-                # element variant is the lambda variable (bound once)
-                plans.append(("variant_array", spec, fv_name))
-                continue
-            vt_name = f"__sinker_vt{i}"
-            stage_tag[vt_name] = F.schema_of_variant(F.col(fv_name))
-            if spec.internal in _DT_TYPES:
-                s_name = f"__sinker_s{i}"
-                ts_name = f"__sinker_ts{i}"
-                cl_name = f"__sinker_cl{i}"
-                stage_tag[s_name] = F.try_variant_get(F.col(fv_name), "$", "string")
-                # default-parser attempt staged ONCE; _clean's regex chain
-                # gated on it failing — on a single-layout ISO feed the
-                # regexes vanish from the per-row cost (the apache-ingest
-                # profile's largest single term)
-                stage_clean[ts_name] = F.try_to_timestamp(F.col(s_name))
-                stage_lazy[cl_name] = F.when(
-                    F.col(ts_name).isNull(), _clean(F.col(s_name))
-                )
-                plans.append(
-                    ("variant_dt", spec, fv_name, vt_name, s_name, cl_name, ts_name)
-                )
-            else:
-                plans.append(("variant", spec, fv_name, vt_name))
-            continue
-        if len(parts) == 1:  # nested paths extract from the message text
-            raw_path_specs.append(spec)
-        raw_name = f"__sinker_raw{i}"
-        stage_extract[raw_name] = _raw_value_expr(parsed, value, spec)
-        if spec.internal in _DT_TYPES:
-            ts_name = f"__sinker_ts{i}"
-            cl_name = f"__sinker_cl{i}"
-            stage_tag[ts_name] = F.try_to_timestamp(F.col(raw_name).cast("string"))
-            stage_clean[cl_name] = F.when(
-                F.col(ts_name).isNull(), _clean(F.col(raw_name).cast("string"))
-            )
-            plans.append(("raw_dt", spec, raw_name, cl_name, ts_name))
-        else:
-            plans.append(("raw", spec, raw_name))
+        if len(parts) > 1:
+            # nested path: re-extract from the message text (gjson path).
+            # Bracket segments must NOT be preceded by a dot — Spark's
+            # JsonPath parser rejects "$.['a.b'].c" (silently NULLing every
+            # row) but accepts "$['a.b'].c".
+            path = "$" + "".join(f"['{p}']" if "." in p else f".{p}" for p in parts)
+            raw = F.get_json_object(value, path)
+            return (_text_array(raw) if spec.internal in _ARRAY_TYPES else raw), False
+        if _IDENT_RE.match(parts[0]) and spec.internal != InternalType.STRING:
+            # String targets take the raw-text path instead: the reference
+            # emits the value's raw JSON text verbatim, while variant
+            # re-serialization normalizes it (sorts object keys, drops ".0"
+            # from integral floats inside arrays).
+            variant_used = True
+            field = F.try_variant_get(F.col("__sinker_vroot"), f"$.{parts[0]}", "variant")
+            return field, True
+        raw_path_specs.append(spec)
+        return F.col("__sinker_praw").getField(parts[0]), False
 
-    # Stage the message parses — each pruned to what the plan actually
-    # uses.  The raw from_json schema lists ONLY the raw-path fields (a
-    # String-heavy schema skips variant work per field; a numeric-heavy
-    # schema materializes few raw fields), and a parse with no consumers
-    # is omitted entirely, so a schema never pays for both full parses.
-    parse_stage: dict[str, Column] = {}
-    if raw_path_specs:
-        parse_stage["__sinker_praw"] = F.from_json(
-            value, _raw_string_schema(raw_path_specs)
-        )
-    if any(p[0] in ("variant", "variant_dt", "variant_array") for p in plans):
-        parse_stage["__sinker_vroot"] = F.try_parse_json(value.cast("string"))
-    staged = df.withColumns(parse_stage) if parse_stage else df
+    def message_parse() -> dict[str, Column]:
+        # each message parse is pruned to what the extractions use: the raw
+        # from_json schema lists ONLY the raw-path fields, and a parse with
+        # no consumers is omitted, so a schema never pays for both in full
+        parses = {}
+        if raw_path_specs:
+            raw_schema = _raw_string_schema(raw_path_specs)
+            parses["__sinker_praw"] = F.from_json(value, raw_schema)
+        if variant_used:
+            parses["__sinker_vroot"] = F.try_parse_json(value.cast("string"))
+        return parses
 
-    if stage_extract:
-        staged = staged.withColumns(stage_extract)
-    if stage_tag:
-        staged = staged.withColumns(stage_tag)
-    if stage_clean:
-        staged = staged.withColumns(stage_clean)
-    if stage_lazy:
-        staged = staged.withColumns(stage_lazy)
-
-    out_cols: list[Column] = []
-    for plan in plans:
-        kind, spec = plan[0], plan[1]
-        if kind == "kafka":
-            out_cols.append(F.col(plan[2]).cast(spec.spark_type).alias(spec.name))
-        elif kind == "variant_array":
-            out_cols.append(coerce_variant_expr(F.col(plan[2]), spec, time_unit))
-        elif kind == "variant":
-            out_cols.append(
-                coerce_variant_expr(
-                    F.col(plan[2]), spec, time_unit, vt=F.col(plan[3])
-                )
-            )
-        elif kind == "variant_dt":
-            out_cols.append(
-                coerce_variant_expr(
-                    F.col(plan[2]),
-                    spec,
-                    time_unit,
-                    vt=F.col(plan[3]),
-                    dt_str=F.col(plan[4]),
-                    dt_cleaned=F.col(plan[5]),
-                    dt_ts0=F.col(plan[6]),
-                )
-            )
-        elif kind == "raw_dt":
-            out_cols.append(
-                coerce_expr(
-                    F.col(plan[2]),
-                    spec,
-                    time_unit,
-                    raw_is_attr=True,
-                    dt_cleaned=F.col(plan[3]),
-                    dt_ts0=F.col(plan[4]),
-                )
-            )
-        else:  # raw
-            out_cols.append(
-                coerce_expr(F.col(plan[2]), spec, time_unit, raw_is_attr=True)
-            )
-    if keep_value:
-        out_cols.append(value.alias("__raw_value"))
-    # output is exactly the dims (+ optional raw value): Kafka metadata
-    # reaches the table only through explicit __kafka* virtual dims — a
-    # silent topic/partition/offset passthrough broke JDBC inserts into
-    # tables without those columns and disagreed with parse_csv
-    return staged.select(*out_cols)
+    return _staged_parse(df, schema, time_unit, extract, message_parse)
 
 
 def with_parse_errors(df: DataFrame, value_col: str = "value") -> DataFrame:
@@ -327,7 +267,6 @@ def parse_csv(
     schema: TableSchema,
     csv_format: list[str],
     delimiter: str = ",",
-    value_col: str = "value",
     time_unit: float = 1.0,
 ) -> DataFrame:
     """Parse a CSV ``value`` column (one record per message).
@@ -341,6 +280,7 @@ def parse_csv(
     nil (→ NULL for nullable targets, the type default otherwise); an
     EMPTY cell is the empty string, so ``Nullable(String)`` keeps '' (the
     r8 ingest fuzz caught Spark's empty-cell→NULL default diverging here).
+    A target missing from ``csv_format`` reads as nil.
     Deliberate softenings vs the reference, documented rather than
     replicated: the reference ERRORS any record whose cell count mismatches
     ``csvFormat`` (we pad/ignore permissively — padded cells behave as
@@ -349,88 +289,23 @@ def parse_csv(
     numeric targets fed garbage, e.g. reference Nullable(Float64) of
     'abc' → 0.0, here NULL).
     """
-    from .datetimes import _clean
+    columns = set(csv_format)
 
-    ddl = ", ".join(f"`{name}` STRING" for name in csv_format)
-    # escape='"' gives RFC-4180 doubled-quote semantics (reference
-    # parser/csv.go uses encoding/csv, which is RFC-4180)
-    # Same single-evaluation staging as parse_json: the record parse, each
-    # cell extraction, and the cleaned datetime string become attributes so
-    # conditional branches downstream never re-instantiate them.
-    parsed = F.col("__sinker_craw")
-    staged = df.withColumns(
-        {
-            "__sinker_craw": F.from_csv(
-                F.col(value_col),
-                F.lit(ddl),
-                {"sep": delimiter, "mode": "PERMISSIVE", "escape": '"'},
-            )
-        }
-    )
-    by_source = {s: i for i, s in enumerate(csv_format)}
-    _DT_TYPES = (InternalType.DATETIME, InternalType.ELASTIC_DATETIME)
-    stage_cells: dict[str, Column] = {}
-    stage_ts: dict[str, Column] = {}     # staged default-parse attempts
-    stage_clean: dict[str, Column] = {}  # cleaned dt string, parse-gated
-    plans: list[tuple] = []  # (kind, spec, names...)
-    for i, spec in enumerate(schema):
-        ksrc = kafka_virtual_source(spec.name)
-        if ksrc is not None and ksrc in df.columns:
-            plans.append(("kafka", spec, ksrc))
-            continue
-        if spec.source_name not in by_source:
-            plans.append(("missing", spec))
-            continue
-        cell = _csv_cell_norm(parsed.getField(spec.source_name))
-        raw_name = f"__sinker_c{i}"
-        if spec.internal in _ARRAY_TYPES:
-            stage_cells[raw_name] = F.from_json(cell, T.ArrayType(T.StringType()))
-            plans.append(("array", spec, raw_name))
-        elif spec.internal in _DT_TYPES:
-            ts_name = f"__sinker_cts{i}"
-            cl_name = f"__sinker_ccl{i}"
-            stage_cells[raw_name] = cell
-            stage_ts[ts_name] = F.try_to_timestamp(F.col(raw_name))
-            stage_clean[cl_name] = F.when(
-                F.col(ts_name).isNull(), _clean(F.col(raw_name))
-            )
-            plans.append(("dt", spec, raw_name, cl_name, ts_name))
+    def extract(spec: ColumnSpec) -> tuple[Column, bool]:
+        if spec.source_name in columns:
+            cell = _csv_cell_norm(F.col("__sinker_craw").getField(spec.source_name))
         else:
-            stage_cells[raw_name] = cell
-            plans.append(("cell", spec, raw_name))
-    if stage_cells:
-        staged = staged.withColumns(stage_cells)
-    if stage_ts:
-        staged = staged.withColumns(stage_ts)
-    if stage_clean:
-        staged = staged.withColumns(stage_clean)
+            cell = F.lit(None).cast("string")
+        return (_text_array(cell) if spec.internal in _ARRAY_TYPES else cell), False
 
-    out_cols = []
-    for plan in plans:
-        kind, spec = plan[0], plan[1]
-        if kind == "kafka":
-            out_cols.append(F.col(plan[2]).cast(spec.spark_type).alias(spec.name))
-        elif kind == "missing":
-            out_cols.append(coerce_expr(F.lit(None).cast("string"), spec, time_unit))
-        elif kind == "array":
-            # array cells coerce inside a transform lambda (bound once)
-            out_cols.append(coerce_expr(F.col(plan[2]), spec, time_unit))
-        elif kind == "dt":
-            out_cols.append(
-                coerce_expr(
-                    F.col(plan[2]),
-                    spec,
-                    time_unit,
-                    raw_is_attr=True,
-                    dt_cleaned=F.col(plan[3]),
-                    dt_ts0=F.col(plan[4]),
-                )
-            )
-        else:
-            out_cols.append(
-                coerce_expr(F.col(plan[2]), spec, time_unit, raw_is_attr=True)
-            )
-    return staged.select(*out_cols)
+    def message_parse() -> dict[str, Column]:
+        # escape='"' gives RFC-4180 doubled-quote semantics (reference
+        # parser/csv.go uses encoding/csv, which is RFC-4180)
+        ddl = ", ".join(f"`{name}` STRING" for name in csv_format)
+        opts = {"sep": delimiter, "mode": "PERMISSIVE", "escape": '"'}
+        return {"__sinker_craw": F.from_csv(F.col("value"), F.lit(ddl), opts)}
+
+    return _staged_parse(df, schema, time_unit, extract, message_parse)
 
 
 # ---------------------------------------------------------------------------

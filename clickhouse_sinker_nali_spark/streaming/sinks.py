@@ -57,6 +57,23 @@ def shard_expr(policy: str, key: str, shards: int, faithful: bool = False) -> Co
     raise ValueError(f"unknown sharding policy {policy!r}")
 
 
+def shard_column(policy: str, key: str, shards: int, epoch_id: int) -> Column:
+    """The ``__shard`` both sinks route a micro-batch by, always in
+    ``[0, shards)``: the JDBC sink writes shard s with a ``__shard == s``
+    filter, so a row outside that range would match no shard and be lost.
+
+    ``shard_expr`` alone is NULL for a NULL key under both policies, and
+    negative under ``stripe,N`` for a key below ``-N`` (key -15 with
+    ``stripe,10`` on 4 shards gives -1); ``pmod`` maps every shard into
+    range and a NULL key goes to shard 0.  Empty policy → the whole batch
+    to ``epoch_id % shards``.
+    """
+    if not policy:
+        return F.lit(epoch_id % shards)
+    shard = F.pmod(shard_expr(policy, key, shards), F.lit(shards))
+    return F.coalesce(shard, F.lit(0))
+
+
 def with_retries(
     fn: Callable[[int], None],
     replicas: int,
@@ -198,14 +215,12 @@ class JdbcClickHouseSink:
     def write(self, df: DataFrame, epoch_id: int) -> None:
         shards = len(self.urls)
         if self.sharding_policy:
-            routed = df.repartition(
-                shards, shard_expr(self.sharding_policy, self.sharding_key, shards)
+            shard = shard_column(
+                self.sharding_policy, self.sharding_key, shards, epoch_id
             )
+            routed = df.withColumn("__shard", shard).repartition(shards, "__shard")
             parts = [
-                routed.filter(
-                    shard_expr(self.sharding_policy, self.sharding_key, shards)
-                    == F.lit(s)
-                )
+                routed.filter(F.col("__shard") == s).drop("__shard")
                 for s in range(shards)
             ]
         else:
@@ -253,12 +268,10 @@ class ParquetSink:
 
     def write(self, df: DataFrame, epoch_id: int) -> None:
         self.epochs.append(epoch_id)
-        if self.sharding_policy:
-            out = df.withColumn(
-                "__shard", shard_expr(self.sharding_policy, self.sharding_key, self.shards)
-            )
-        else:
-            out = df.withColumn("__shard", F.lit(epoch_id % self.shards))
+        shard = shard_column(
+            self.sharding_policy, self.sharding_key, self.shards, epoch_id
+        )
+        out = df.withColumn("__shard", shard)
         (
             out.repartition(self.shards, F.col("__shard"))
             .write.mode("append")

@@ -332,3 +332,40 @@ def test_mid_batch_sink_crash_recovers_exactly_once(spark, tmp_path):
     # even RAW (per-epoch transactionality, no FINAL needed)
     assert b.count() == b.select("ID").distinct().count()
     assert b.count() + n_partial == n
+
+
+def test_null_and_negative_shard_keys_are_routed_not_dropped(spark, tmp_path):
+    """A NULL sharding key and a key below -stripe used to give a NULL or a
+    negative shard, so the per-shard filters matched no shard and the rows
+    were silently dropped.  Both sinks now route by one ``__shard`` mapped
+    into [0, shards): pmod for negative shards, shard 0 for a NULL key."""
+    from clickhouse_sinker_nali_spark.streaming.sinks import ParquetSink
+
+    shards = 4
+    # stripe,10 on 4 shards: NULL -> 0, -15 -> -1 -> 3, 5 -> 0, 25 -> 2, 37 -> 3
+    expected = {None: 0, -15: 3, 5: 0, 25: 2, 37: 3}
+    df = spark.createDataFrame(
+        [(k, f"row{k}") for k in expected], "ID bigint, NAME string"
+    )
+    urls = [_derby_url(tmp_path, f"shard_{s}") for s in range(shards)]
+    for url in urls:
+        conn = _connect(spark, url)
+        _exec(conn, "CREATE TABLE EVENTS_SH (ID BIGINT, NAME VARCHAR(100))")
+        conn.close()
+    sink = JdbcClickHouseSink(
+        urls=[[u] for u in urls], table="EVENTS_SH",
+        sharding_policy="stripe,10", sharding_key="ID", properties=DERBY_PROPS,
+    )
+    sink.write(df, epoch_id=0)
+    got = {}
+    for s, url in enumerate(urls):
+        for r in spark.read.jdbc(url, "EVENTS_SH", properties=DERBY_PROPS).collect():
+            got[r.ID] = s
+    assert got == expected
+
+    out = str(tmp_path / "parquet")
+    ParquetSink(
+        path=out, shards=shards, sharding_policy="stripe,10", sharding_key="ID"
+    ).write(df, epoch_id=0)
+    rows = spark.read.parquet(out).collect()
+    assert {r.ID: r["__shard"] for r in rows} == expected

@@ -345,6 +345,35 @@ class TestCsvParse:
         assert row.not_in_csv == ""
 
 
+# The three DateTime routes share one staging: a flat JSON field (variant
+# path), a nested JSON path (raw-text path) and a CSV cell must agree on
+# every layout, including those only the _clean-gated cascade matches.
+@pytest.mark.parametrize(
+    "text,expected",
+    [
+        ("2009-07-13 09:07:13", dt.datetime(2009, 7, 13, 9, 7, 13)),
+        ("13/07/2009 09:07:13", dt.datetime(2009, 7, 13, 9, 7, 13)),
+        ("Mon, 13 Jul 2009 09:07:13 GMT", dt.datetime(2009, 7, 13, 9, 7, 13)),
+        ("Fri Jul  3 09:07:13 2009", dt.datetime(2009, 7, 3, 9, 7, 13)),
+        ("Mon, 13 Jul 2009 09:07:13 -0700", dt.datetime(2009, 7, 13, 16, 7, 13)),
+        ("not a time", dt.datetime(1970, 1, 1)),
+    ],
+)
+def test_datetime_routes_agree(spark, text, expected):
+    json_schema = TableSchema(
+        columns=[
+            ColumnSpec(name="flat", ch_type="DateTime", source_name="t"),
+            ColumnSpec(name="nested", ch_type="DateTime", source_name="o.t"),
+        ]
+    )
+    msg = json.dumps({"t": text, "o": {"t": text}})
+    row = parse_json(_one_row_df(spark, msg), json_schema).collect()[0]
+    csv_schema = TableSchema.from_dims([{"name": "cell", "type": "DateTime"}])
+    line = '"' + text.replace('"', '""') + '",x'
+    cell = parse_csv(_one_row_df(spark, line), csv_schema, ["cell", "pad"])
+    assert (row.flat, row.nested, cell.collect()[0].cell) == (expected,) * 3
+
+
 class TestTypeInference:
     @pytest.mark.parametrize(
         "value,expected",

@@ -8,6 +8,7 @@ silent order-of-magnitude regression on a real cluster.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -737,3 +738,84 @@ def test_registry_plans_free_of_cartesian_and_roundrobin(spark):
         if hits:
             offenders.append(f"{name}: {'+'.join(hits)}")
     assert not offenders, offenders
+
+
+# -- ingest parse staging ----------------------------------------------------
+#
+# Each helper below is staged into its own projection and referenced as an
+# attribute.  Inlined, conditional CASE branches re-evaluate them per branch
+# (codegen subexpression elimination skips conditional branches): the 10×
+# parse regression README documents.
+
+_PARSE_JSON_DIMS = [
+    ("s", "String", "s"),
+    ("i", "Int32", "i"),
+    ("f", "Float64", "f"),
+    ("t", "DateTime", "t"),
+    ("nt", "DateTime", "o.t"),
+    ("a", "Array(String)", "a"),
+]
+
+
+def _parse_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _assert_datetime_cleans_gated(plan: str, n_datetime: int) -> None:
+    """Every regexp_replace is the _clean chain of one DateTime target, under
+    CASE WHEN isnull(<attr>) where <attr> is that target's staged default
+    parse attempt of the same string."""
+    attempts = {
+        ts: src
+        for src, ts in re.findall(r"cast\((\w+#\d+) as timestamp\) AS (\w+#\d+)", plan)
+    }
+    gated = re.findall(
+        r"CASE WHEN isnull\((\w+#\d+)\) THEN "
+        r"regexp_replace\(regexp_replace\(trim\((\w+#\d+)",
+        plan,
+    )
+    assert len(gated) == n_datetime, gated
+    assert plan.count("regexp_replace(") == 2 * len(gated)
+    for ts, src in gated:
+        assert attempts.get(ts) == src, (ts, src, attempts)
+
+
+@pytest.mark.parametrize("with_array", [True, False])
+def test_parse_json_plan_stages_each_helper_once(spark, with_array):
+    from clickhouse_sinker_nali_spark.parsers import parse_json
+    from clickhouse_sinker_nali_spark.schema import ColumnSpec, TableSchema
+
+    dims = [d for d in _PARSE_JSON_DIMS if with_array or d[0] != "a"]
+    schema = TableSchema(
+        columns=[ColumnSpec(name=n, ch_type=t, source_name=s) for n, t, s in dims]
+    )
+    df = spark.createDataFrame([("{}",)], "value string")
+    plan = _parse_plan(parse_json(df, schema))
+    # one message parse per format: the variant parse for flat fields, one
+    # all-string from_json for raw-text (String) fields
+    assert plan.count("VariantExpressionEvalUtils.parseJson(") == 1
+    assert plan.count("from_json(") == 1
+    # the type tag is evaluated once per flat non-String scalar (i, f, t);
+    # array elements tag their lambda variable instead
+    assert len(re.findall(r"schemaOfVariant\((?!lambda )", plan)) == 3
+    _assert_datetime_cleans_gated(plan, n_datetime=2)
+    assert plan.count("lambdafunction(") == (1 if with_array else 0)
+
+
+def test_parse_csv_plan_stages_each_helper_once(spark):
+    from clickhouse_sinker_nali_spark.parsers import parse_csv
+    from clickhouse_sinker_nali_spark.schema import TableSchema
+
+    schema = TableSchema.from_dims(
+        [
+            {"name": "t", "type": "DateTime"},
+            {"name": "n", "type": "Int64"},
+            {"name": "s", "type": "String"},
+        ]
+    )
+    df = spark.createDataFrame([("",)], "value string")
+    plan = _parse_plan(parse_csv(df, schema, ["t", "n", "s"]))
+    assert plan.count("from_csv(") == 1
+    assert "parseJson(" not in plan and "from_json(" not in plan
+    _assert_datetime_cleans_gated(plan, n_datetime=1)
+    assert "lambdafunction(" not in plan
